@@ -25,8 +25,8 @@ implement inside their catalogs):
   pruning is unsound there; see `sources/lakehouse_ds.py`).
 - MoR tables cannot be a per-file relation (latest-wins needs a key
   shuffle), so they resolve to a GENERATED TEMP VIEW over
-  ``MorTable.read`` — the same union + window plan the engine API
-  serves, reachable from plain SQL.
+  ``MorTable.read`` — the same one-scan-per-role + window plan the
+  engine API serves, reachable from plain SQL.
 - ``<table> VERSION AS OF <n>`` is rewritten before parsing to a
   version-pinned view (``<table>__asof_<n>``), created on demand from
   the same reader with ``version``/``as_of`` pinned. Real formats do

@@ -15,8 +15,9 @@ latest-wins across the version chain:
 
 Read semantics: for each key, the highest-version event wins; an upsert
 event carries the row, a tombstone hides the key (until a later upsert
-re-inserts it). One union of delta scans + one window shuffle on the key
-— the classic MoR read tax, bounded by compaction.
+re-inserts it). One scan per file role over the whole chain (each row's
+version read off its ``v<N>/`` path) + one window shuffle on the key —
+the classic MoR read tax, bounded by compaction.
 
 ``compact()`` is the maintenance op that bounds the chain: it
 materializes the resolved state as a new checkpointed commit, after
@@ -32,6 +33,7 @@ differs (deltas here, full states there).
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -48,48 +50,21 @@ _CKPT = "_CHECKPOINT"
 def _rp(spark, *files):
     """spark.read of engine-written parquet files under an explicit
     driver-side footer schema (merge.donor_schema) — skips the
-    schema-inference job a bare .parquet() fires per call (r17);
-    falls back to inference whenever the footer probe declines.
+    schema-inference job a bare .parquet() fires per call (r17).
 
     Multi-commit file sets (r17 ADVICE): some call sites read files
     spanning several versions (e.g. DV-referenced files), where a later
     commit may have widened a type — the oldest-file donor would force
-    a downcast read that fails EXECUTOR-side, past the driver-side
-    try/except. When the file set spans more than one version
-    directory, verify every footer equals the donor's (cheap
-    driver-side loop over metadata-scale file lists); on a mismatch,
-    reconcile with the field-wise WIDEST integral/float type (Spark
-    upcasts narrower parquet files to an explicitly wider read schema,
-    SPARK-40876 — exactly the widen overlay's cast-on-read), and only
-    when no numeric widening covers the difference fall back to bare
-    inference (the pre-r17 behavior: fails loudly, never serves wrong
-    data). Single-directory sets share one writer schema by
-    construction and skip the loop."""
-    from .merge import donor_schema
-
-    paths = [f for f in files if isinstance(f, str)]
-    donor = donor_schema(paths)
-    if donor is not None and len({os.path.dirname(p) for p in paths}) > 1:
-        try:
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            schemas = []
-            for p in sorted(paths):
-                sch = pq.ParquetFile(
-                    p[len("file:"):] if p.startswith("file:") else p
-                ).schema_arrow
-                if not schemas or sch != schemas[-1]:
-                    schemas.append(sch)
-            if len(schemas) > 1:
-                donor = _widen_footers(
-                    [from_arrow_schema(s) for s in schemas]
-                )
-        except Exception:
-            donor = None
-    if donor is not None:
-        return spark.read.schema(donor).parquet(*files)
-    return spark.read.parquet(*files)
+    a downcast read that fails EXECUTOR-side. The files are grouped by
+    directory (one writer schema per directory by construction) and
+    read through ``_scan_chain``, whose schema takes the field-wise
+    WIDEST integral/float type across the groups' donors and falls back
+    to inference when no numeric widening covers the difference (fails
+    loudly, never serves wrong data)."""
+    by_dir: dict[str, list[str]] = {}
+    for f in files:
+        by_dir.setdefault(os.path.dirname(f), []).append(f)
+    return _scan_chain(spark, list(by_dir.values()), {})
 
 
 #: numeric widening lattice for _widen_footers: rank by containment
@@ -125,6 +100,78 @@ def _widen_footers(structs):
     return StructType(
         [StructField(n, fields[n], True) for n in order]
     )
+
+
+#: A chain file's commit version, read off its path. The reader hands a
+#: scan version N's files only as ``<table>/v<N>/<manifest-relative
+#: path>`` (``_view_from_manifest``; ``v<N>/<role>`` directories on
+#: legacy tables), and every writer stages a version's files in one
+#: directory that is renamed onto ``v<N>``, so the LAST ``/v<digits>/``
+#: segment is the version (nothing below it is named ``v<digits>``:
+#: role dirs, hive ``col=value`` dirs, part files). A constant pattern
+#: keeps the generated code version-free, where a per-commit
+#: ``F.lit(v)`` is inlined into the Java source and every new commit
+#: compiled new classes. Under ANSI a path that does not match fails
+#: the cast loudly instead of resolving with a NULL version.
+_VERSION_DIR = r"^.*/v([0-9]+)/"
+
+
+def _file_version():
+    return F.regexp_extract(
+        F.col("_metadata.file_path"), _VERSION_DIR, 1
+    ).cast("int")
+
+
+@functools.lru_cache(maxsize=4096)
+def _footer(path: str):
+    """Spark schema of one committed file's footer (``donor_schema``),
+    cached: committed files are immutable, so a repeated chain read opens
+    only the footers of versions it has not seen before."""
+    from .merge import donor_schema
+
+    return donor_schema([path])
+
+
+def _scan_chain(spark, per_version: list[list[str]], widen_types: dict):
+    """ONE parquet scan over a chain's files of one role (one file list
+    per version) under a read schema built on the driver: each version's
+    donor footer (versions share one writer schema per commit), merged
+    in first-appearance field order with numeric widening across
+    versions (``_widen_footers``; a later delta may ADD columns — older
+    files read them as NULL), and every widened column forced to its
+    era's declared type (S52b: parquet inference over mixed int32/int64
+    footers is order-dependent; SPARK-40876 upcasts narrow files per
+    file). Falls back to merged-schema inference when a footer is not
+    readable (legacy directory views) or versions differ by more than a
+    numeric widening."""
+    from pyspark.sql.types import (
+        StructField,
+        StructType,
+        _parse_datatype_string,
+    )
+
+    files = [f for fs in per_version for f in fs]
+    donors = [_footer(sorted(fs)[0]) for fs in per_version]
+    schema = None
+    if all(d is not None for d in donors):
+        same = all(d == donors[0] for d in donors)
+        schema = donors[0] if same else _widen_footers(donors)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    if widen_types:
+        schema = StructType(
+            [
+                StructField(
+                    f.name,
+                    _parse_datatype_string(widen_types[f.name.lower()]),
+                    True,
+                )
+                if f.name.lower() in widen_types
+                else f
+                for f in schema.fields
+            ]
+        )
+    return spark.read.schema(schema).parquet(*files)
 
 
 
@@ -330,115 +377,66 @@ class MorTable:
     def _read_with_provenance(self, spark: SparkSession) -> DataFrame:
         """Resolved current state plus (__fp, __ri) provenance of each
         winning row — the input a position-delete writer needs."""
-        return self._resolve_chain(spark, self._chain()[1], provenance=True)
+        return self._resolve_chain(
+            spark,
+            {v: self._commit_view(v) for v in self._chain()[1]},
+            provenance=True,
+        )
 
     def _resolve_chain(
         self,
         spark: SparkSession,
-        chain: list[int],
+        views: dict[int, tuple],
         provenance: bool,
-        prune: list[tuple[str, object, object]] | None = None,
     ) -> DataFrame:
-        """Latest-wins resolution over one version chain: union the
-        delta scans, apply position deletes (if any), take the highest
-        event per key. ``provenance=True`` keeps each winning row's
-        (__fp, __ri) — needed by position-delete WRITERS; plain reads
-        drop them (and skip the _metadata projection entirely when the
-        chain carries no DVs)."""
-        views = {v: self._commit_view(v, prune=prune) for v in chain}
-        has_dv = provenance or any(
-            views[v][2] is not None for v in chain
-        )
-        # S52b type widening: a maintenance commit can mix ERAS in one
-        # file set (optimize_where relinks pre-widen files next to
-        # rewritten wide ones), and parquet schema inference over mixed
-        # int32/int64 footers is footer-order-dependent (narrow-first
-        # errors on the wide file). With widen events in play, scan
-        # each commit under an EXPLICIT schema: its own first footer's
-        # columns with every widened column forced to the era's
-        # declared type — SPARK-40876 upcasts narrow files per file.
-        widen_types = self._era_widen_types(max(chain)) if chain else {}
-
-        def _scan(files: list[str]) -> DataFrame:
-            if not widen_types:
-                # explicit driver-side footer schema: a bare .parquet()
-                # fires a schema-inference job per commit view per read
-                # (r17; each SQL statement resolving a V-deep chain paid
-                # V such jobs)
-                return _rp(spark, *files)
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
-            from pyspark.sql.types import (
-                StructField,
-                StructType,
-                _parse_datatype_string,
-            )
-
-            donor = from_arrow_schema(
-                pq.ParquetFile(sorted(files)[0]).schema_arrow
-            )
-            fields = [
-                StructField(
-                    f.name,
-                    _parse_datatype_string(widen_types[f.name.lower()]),
-                    True,
-                )
-                if f.name.lower() in widen_types
-                else StructField(f.name, f.dataType, True)
-                for f in donor.fields
-            ]
-            return spark.read.schema(StructType(fields)).parquet(*files)
-
-        saw_data = False
-        frames: list[DataFrame] = []
-        dv_frames: list[DataFrame] = []
-        for v in chain:
-            data_files, del_files, pos_files, _ = views[v]
-            if data_files is not None:
-                saw_data = True
-                d = _scan(data_files)
-                if has_dv:
-                    # row provenance so position deletes can target this
-                    # commit's physical rows: (file URI, row index) —
-                    # computed by the scan itself, no extra I/O (S13's
-                    # _metadata column)
-                    d = d.select(
-                        "*",
-                        F.col("_metadata.file_path").alias("__fp"),
-                        F.col("_metadata.row_index").alias("__ri"),
-                    )
-                frames.append(
-                    d.select(
-                        "*",
-                        F.lit(v).alias("__v"),
-                        F.lit("u").alias("__kind"),
-                    )
-                )
-            if del_files is not None or pos_files is not None:
-                if not saw_data:
-                    raise ValueError(
-                        "MoR chain starts with a delete-only commit"
-                    )
-            if del_files is not None:
-                frames.append(
-                    _scan(del_files).select(
-                        F.col(self.key),
-                        F.lit(v).alias("__v"),
-                        F.lit("d").alias("__kind"),
-                    )
-                )
-            if pos_files is not None:
-                dv_frames.append(
-                    _rp(spark, *pos_files).select(
-                        "__file", "__pos", F.lit(v).alias("__dv_v")
-                    )
-                )
-        if not frames:
+        """Latest-wins resolution over one version chain (``views``:
+        version -> ``_commit_view`` tuple): ONE scan per file role over
+        the whole chain (data, key tombstones, position deletes), each
+        row tagged with its commit version read off its own file path,
+        then the highest event per key. Plan shape and generated code
+        do not depend on the chain's length or version numbers, so a
+        repeated read reuses the compiled classes of the last one.
+        ``provenance=True`` keeps each winning row's (__fp, __ri) —
+        needed by position-delete WRITERS; plain reads drop them (and
+        skip the _metadata row index when the chain carries no DVs)."""
+        chain = sorted(views)
+        if not chain:
             raise FileNotFoundError(f"no version of MoR table at {self.path}")
-        events = frames[0]
-        for f in frames[1:]:
-            events = events.unionByName(f, allowMissingColumns=True)
-        if dv_frames:
+        data, dels, pos = (
+            [views[v][i] for v in chain if views[v][i] is not None]
+            for i in range(3)
+        )
+        if not data:
+            raise ValueError(f"MoR chain at {self.path} holds no data files")
+        widen_types = self._era_widen_types(chain[-1])
+        prov = []
+        if provenance or pos:
+            # row provenance so position deletes can target physical
+            # rows: (file URI, row index) — computed by the scan itself,
+            # no extra I/O (S13's _metadata column)
+            prov = [
+                F.col("_metadata.file_path").alias("__fp"),
+                F.col("_metadata.row_index").alias("__ri"),
+            ]
+        events = _scan_chain(spark, data, widen_types).select(
+            "*",
+            *prov,
+            _file_version().alias("__v"),
+            F.lit("u").alias("__kind"),
+        )
+        if dels:
+            # tombstones ride the same union with NULL payloads; within
+            # one version a key is either upserted or deleted, never
+            # both, so (version) is a total order per key
+            events = events.unionByName(
+                _scan_chain(spark, dels, widen_types).select(
+                    F.col(self.key),
+                    _file_version().alias("__v"),
+                    F.lit("d").alias("__kind"),
+                ),
+                allowMissingColumns=True,
+            )
+        if pos:
             # DELETION-VECTOR resolution (the Delta-DV / Iceberg-v2
             # position-delete shape): a DV row names a physical row
             # (file, position) of an earlier data commit — no key
@@ -447,11 +445,11 @@ class MorTable:
             # commit version (so shadowed history does NOT resurface,
             # and a later upsert re-inserts the key). DVs are tiny
             # relative to data — broadcast; one join, no extra shuffle.
-            dv = dv_frames[0]
-            for f in dv_frames[1:]:
-                dv = dv.unionByName(f)
-            dv = dv.groupBy("__file", "__pos").agg(
-                F.max("__dv_v").alias("__dv_v")
+            dv = (
+                _scan_chain(spark, pos, {})
+                .select("__file", "__pos", _file_version().alias("__dv_v"))
+                .groupBy("__file", "__pos")
+                .agg(F.max("__dv_v").alias("__dv_v"))
             )
             events = events.join(
                 F.broadcast(dv),
@@ -477,7 +475,7 @@ class MorTable:
             .filter((F.col("__rn") == 1) & (F.col("__kind") == "u"))
             .drop("__v", "__kind", "__rn")
         )
-        if has_dv and not provenance:
+        if prov and not provenance:
             resolved = resolved.drop("__fp", "__ri")
         return resolved
 
@@ -612,11 +610,15 @@ class MorTable:
         up to it — an as-of read costs the same bounded chain a current
         read does, just truncated; raises on unpublished versions).
 
-        One union over the delta scans since the governing checkpoint +
-        one window shuffle on the key. Tombstones ride the same union
-        as rows with NULL payloads and ``__kind='d'``; within one
+        One scan per file role over every commit since the governing
+        checkpoint (data, key tombstones, position deletes; each row's
+        version read off its ``v<N>/`` path, not a per-commit literal) +
+        one window shuffle on the key. Tombstones ride one union with
+        the data rows with NULL payloads and ``__kind='d'``; within one
         version a key is either upserted or deleted, never both, so
-        (version) is a total order per key.
+        (version) is a total order per key. The plan's shape does not
+        grow with the chain and its generated code does not change with
+        version numbers.
         """
         start, chain = self._chain()
         if as_of is not None:
@@ -647,8 +649,10 @@ class MorTable:
         # commits and tombstones NULL-pad the columns they predate.
         # Silently dropping a newer delta's column (the pre-round-10
         # behavior of projecting to the OLDEST commit's columns) loses
-        # data; unionByName(allowMissingColumns=True) is the fix.
-        out = self._resolve_chain(spark, chain, provenance=False)
+        # data; the chain scan's merged read schema is the fix.
+        out = self._resolve_chain(
+            spark, {v: self._commit_view(v) for v in chain}, provenance=False
+        )
         # column mapping (S46): each surviving resolved row came from
         # exactly ONE delta file, so the rename coalesce is exact here
         # too; events above the as-of version never apply (old
@@ -685,15 +689,18 @@ class MorTable:
         _start, chain = self._chain()
         prune = [(self.key, lo, hi)]
         scanned = skipped = 0
+        views = {}
         for v in chain:
-            for role in ("data", "deletes"):
-                kept, sk = log.files_for(v, role=role, prune=prune)
-                scanned += len(kept)
-                skipped += sk
+            data, sk_data = log.files_for(v, role="data", prune=prune)
+            dels, sk_dels = log.files_for(v, role="deletes", prune=prune)
+            # pos-delete files carry no key column: the no-stats rule
+            # keeps them all (sound)
+            pos, _sk = log.files_for(v, role="pos_deletes")
+            scanned += len(data) + len(dels)
+            skipped += sk_data + sk_dels
+            views[v] = (data or None, dels or None, pos or None, False)
         try:
-            df = self._resolve_chain(
-                spark, chain, provenance=False, prune=prune
-            )
+            df = self._resolve_chain(spark, views, provenance=False)
         except (ValueError, FileNotFoundError):
             # every data file pruned (key provably absent from the
             # chain, or only tombstones survive): empty typed result
@@ -968,60 +975,24 @@ class MorTable:
                     relink.append(ent["path"])
                 else:
                     rewrite.append(ent["path"])
-            # resolved in-range slice: intersecting checkpoint rows at
-            # version=start + every delta's events, latest-wins
-            rng = F.lit(True)
-            if not isinstance(lo, type(UNBOUNDED_LO)):
-                rng = rng & (F.col(self.key) >= F.lit(lo))
-            if not isinstance(hi, type(UNBOUNDED_HI)):
-                rng = rng & (F.col(self.key) <= F.lit(hi))
-            ev = None
-            out_rng = None
+            # resolved slice: the intersecting checkpoint files at
+            # version=start plus every delta's events, latest-wins
+            # through the chain resolver. Out-of-range rows of those
+            # files resolve to themselves: the gate above keeps every
+            # delta event inside the range
+            views = {v: self._commit_view(v) for v in deltas}
             if rewrite:
-                base_df = _rp(spark, 
-                    *[os.path.join(sdir, r) for r in rewrite]
+                views[start] = (
+                    [os.path.join(sdir, r) for r in rewrite],
+                    None,
+                    None,
+                    True,
                 )
-                out_rng = base_df.filter(~rng)
-                ev = (
-                    base_df.filter(rng)
-                    .withColumn("__v", F.lit(start))
-                    .withColumn("__kind", F.lit("u"))
+            new_data = None
+            if any(vw[0] is not None for vw in views.values()):
+                new_data = self._resolve_chain(
+                    spark, views, provenance=False
                 )
-            for v in deltas:
-                data, dels, _pos, _ck = self._commit_view(v)
-                if data:
-                    d = (
-                        _rp(spark, *data)
-                        .withColumn("__v", F.lit(v))
-                        .withColumn("__kind", F.lit("u"))
-                    )
-                    ev = d if ev is None else ev.unionByName(
-                        d, allowMissingColumns=True
-                    )
-                if dels:
-                    t = (
-                        _rp(spark, *dels)
-                        .select(F.col(self.key))
-                        .withColumn("__v", F.lit(v))
-                        .withColumn("__kind", F.lit("d"))
-                    )
-                    ev = t if ev is None else ev.unionByName(
-                        t, allowMissingColumns=True
-                    )
-            w = Window.partitionBy(self.key).orderBy(F.col("__v").desc())
-            resolved = (
-                ev.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .filter(F.col("__kind") == "u")
-                .drop("__v", "__kind", "__rn")
-            )
-            new_data = (
-                resolved
-                if out_rng is None
-                else resolved.unionByName(
-                    out_rng, allowMissingColumns=True
-                )
-            )
             base, claim = _base_and_claim(self.path)
             if base != v0:
                 continue  # a delta landed mid-build: re-resolve
@@ -1032,25 +1003,24 @@ class MorTable:
                 self.path, f".stage-owmpub-{_uuid.uuid4().hex}"
             )
             try:
-                new_data.write.mode("errorifexists").parquet(
-                    os.path.join(stage, "data")
-                )
                 os.makedirs(os.path.join(work, "data"))
                 for rel in relink:
                     dst = os.path.join(work, rel)
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.link(os.path.join(sdir, rel), dst)
                 srcdir = os.path.join(stage, "data")
-                for fn in os.listdir(srcdir):
-                    if fn.endswith(".parquet"):
-                        os.link(
-                            os.path.join(srcdir, fn),
-                            os.path.join(
-                                work,
-                                "data",
-                                f"owm-{_uuid.uuid4().hex[:8]}-{fn}",
-                            ),
-                        )
+                if new_data is not None:
+                    new_data.write.mode("errorifexists").parquet(srcdir)
+                    for fn in os.listdir(srcdir):
+                        if fn.endswith(".parquet"):
+                            os.link(
+                                os.path.join(srcdir, fn),
+                                os.path.join(
+                                    work,
+                                    "data",
+                                    f"owm-{_uuid.uuid4().hex[:8]}-{fn}",
+                                ),
+                            )
                 with open(os.path.join(work, _CKPT), "w") as fh:
                     fh.write("")
                 with open(os.path.join(work, "_SUCCESS"), "w") as fh:

@@ -5,7 +5,10 @@ after one warm-up), but with the UI enabled, and attributes each query's
 wall time to its Spark jobs and stages: how many jobs ran, how much time
 was inside stages vs scheduling/driver gaps, and the slowest stages with
 their shuffle bytes. "Many tiny jobs, big driver gap" = fixed
-per-action/commit overhead; "one long stage" = genuine compute.
+per-action/commit overhead; "one long stage" = genuine compute. Each
+record also carries the query's Janino compiles and compile ms
+(``codegen_compiles``, ``codegen_ms``): classes the generated-class cache
+did not already hold, so codegen churn shows without a profiler.
 
 Usage: python tools/profile_query.py [sf_dir] q_name [q_name ...]
 Emits one JSON line per query to stdout (human summary on stderr).
@@ -35,7 +38,7 @@ def main() -> None:
         sf_dir, names = "/root/testdata/sf0.1", args
 
     from pretalx_hub_etl_spark.queries import load_all
-    from pretalx_hub_etl_spark.session import get_spark
+    from pretalx_hub_etl_spark.session import codegen_counters, get_spark
 
     spark = get_spark("profile", extra_conf={"spark.ui.enabled": "true"})
     sc = spark.sparkContext
@@ -58,11 +61,13 @@ def main() -> None:
         spark.catalog.clearCache()
         before_jobs = {j["jobId"] for j in _get(base, "/jobs")}
         sc.setJobDescription(name)
+        cg0 = codegen_counters(spark)
         t0 = time.time()
         registry[name].fn(spark, sf_dir).write.mode("overwrite").format(
             "noop"
         ).save()
         wall = time.time() - t0
+        cg1 = codegen_counters(spark)
         sc.setJobDescription(None)
         jobs = [j for j in _get(base, "/jobs") if j["jobId"] not in before_jobs]
         stages = {s["stageId"]: s for s in _get(base, "/stages?status=complete")}
@@ -121,6 +126,8 @@ def main() -> None:
             "driver_gap_sec": round(wall - jobs_sec, 3),
             "n_stages": len(st_rows),
             "stage_run_sec_sum": round(sum(r["run_sec"] for r in st_rows), 3),
+            "codegen_compiles": cg1[0] - cg0[0],
+            "codegen_ms": round(cg1[1] - cg0[1], 1),
             "top_stages": st_rows[:8],
             "slow_jobs": sorted(
                 job_rows, key=lambda r: -(r["sec"] or 0)
@@ -130,7 +137,8 @@ def main() -> None:
         print(
             f"{name}: wall={wall:.2f}s jobs={len(job_rows)} "
             f"(sum {jobs_sec:.2f}s, gap {wall - jobs_sec:.2f}s) "
-            f"stages={len(st_rows)}",
+            f"stages={len(st_rows)} "
+            f"compiles={cg1[0] - cg0[0]} ({cg1[1] - cg0[1]:.0f} ms)",
             file=sys.stderr,
         )
 
