@@ -45,6 +45,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import release_checkpoint
+
 _ASOF_RE = re.compile(
     r"\b([A-Za-z_][A-Za-z0-9_]*)\s+VERSION\s+AS\s+OF\s+(\d+)\b",
     re.IGNORECASE,
@@ -394,6 +396,64 @@ def _split_assignments(s: str) -> list[tuple[str, str]]:
             raise ValueError(f"malformed SET assignment: {p.strip()!r}")
         out.append((col.strip(), expr.strip()))
     return out
+
+
+def _equi_source_column(spark, on_sql, ta, sa, target_schema, source_schema):
+    """The source column ``d`` of a top-level ``ON`` conjunct
+    ``ta.c = sa.d`` (either side first) whose two columns have the
+    same atomic type, or None when the condition has no such conjunct.
+
+    With such a conjunct a target row can match two source rows only if
+    two non-NULL source rows share ``d``: equality of one type is
+    transitive, and NULL equals nothing. The condition is read with
+    Spark's own expression parser, so quoting and parentheses need no
+    handling here."""
+    from pyspark.errors import ParseException
+    from pyspark.sql.types import AtomicType, VariantType
+
+    try:
+        cond = (
+            spark._jsparkSession.sessionState()
+            .sqlParser()
+            .parseExpression(on_sql)
+        )
+    except ParseException:
+        return None  # the pair-join guard reports it
+    if spark.conf.get("spark.sql.caseSensitive") == "true":
+        fold = str
+    else:
+        fold = str.lower
+
+    def column(node, alias, schema):
+        if node.getClass().getSimpleName() != "UnresolvedAttribute":
+            return None
+        parts = node.nameParts()
+        if parts.size() != 2 or fold(parts.apply(0)) != fold(alias):
+            return None
+        name = fold(parts.apply(1))
+        hits = [f for f in schema.fields if fold(f.name) == name]
+        return hits[0] if len(hits) == 1 else None
+
+    todo = [cond]
+    while todo:
+        node = todo.pop()
+        op = node.getClass().getSimpleName()
+        if op == "And":
+            todo += [node.right(), node.left()]
+        elif op == "EqualTo":
+            lhs, rhs = node.left(), node.right()
+            for a, b in ((lhs, rhs), (rhs, lhs)):
+                c = column(a, ta, target_schema)
+                d = column(b, sa, source_schema)
+                if (
+                    c is not None
+                    and d is not None
+                    and c.dataType == d.dataType
+                    and isinstance(d.dataType, AtomicType)
+                    and not isinstance(d.dataType, VariantType)
+                ):
+                    return d.name
+    return None
 
 
 class LakehouseSqlCatalog:
@@ -1097,9 +1157,24 @@ class LakehouseSqlCatalog:
         Routing: CoW -> one ``MergeSink.merge`` commit (upserts +
         deletes); MoR -> one delta commit. ``WITH SCHEMA EVOLUTION``
         opts into S22 semantics (a source-only column evolves the
-        table; without it a schema mismatch raises). The SQL-MERGE
-        multiple-match precondition is enforced: a target row matching
-        more than one source row raises instead of multiplying."""
+        table; without it a schema mismatch raises).
+
+        The source is evaluated ONCE: it is pinned with an eager
+        ``localCheckpoint`` before anything reads it, and every later
+        job (the guard, each branch, the MoR data and tombstone writes,
+        a CoW OCC retry) reads those rows. The pin is released when the
+        statement ends, whether it committed, staged or raised.
+
+        The SQL-MERGE multiple-match precondition is enforced: a target
+        row matching more than one source row raises instead of
+        multiplying. The guard runs in two steps. When ``ON`` has a
+        top-level conjunct ``t.c = s.d`` over two columns of the same
+        atomic type, a check over the pinned source alone
+        (non-NULL ``d`` values shared by two source rows) decides
+        first; only if it finds such a value, or no such conjunct
+        exists (casts, non-equi or equality-free conditions), does the
+        pair join of target and source run to decide and report the
+        offending key."""
         m = _MERGE_HEAD_RE.match(query)
         if m is None:
             return None
@@ -1175,6 +1250,12 @@ class LakehouseSqlCatalog:
             source = self._frame(src_name, None)
         else:
             source = self.spark.table(src_name)
+        # ONE evaluation of the source for the whole statement: the
+        # guard, every branch and each write job (MoR writes data and
+        # tombstones in two jobs; a CoW OCC retry recomputes) read the
+        # pinned rows, so a nondeterministic source, or one that reads
+        # the target itself, gives every branch the same rows
+        source = source.localCheckpoint(eager=True)
         # Each branch (matched update/delete, insert, by-source delete)
         # is built as its OWN spark.sql plan over two temp views, then
         # unioned. Sharing DataFrame alias scopes / Column objects
@@ -1195,18 +1276,20 @@ class LakehouseSqlCatalog:
         try:
             return self._merge_body(
                 query, name, kind, path, key, evo, tv, sv, ta, sa,
-                on_sql, clause_texts, target,
+                on_sql, clause_texts, target, source,
             )
         finally:
             # ALWAYS drop the scaffolding views — a parse/validation
             # ValueError below used to leak two uniquely-named views
-            # into the shared session per failed MERGE
+            # into the shared session per failed MERGE — and the pinned
+            # source (a txn-staged delta is already written by now)
             for view in (tv, sv):
                 self.spark.catalog.dropTempView(view)
+            release_checkpoint(source)
 
     def _merge_body(
         self, query, name, kind, path, key, evo, tv, sv, ta, sa,
-        on_sql, clause_texts, target,
+        on_sql, clause_texts, target, source,
     ) -> DataFrame:
         from pyspark.sql import functions as F
 
@@ -1286,17 +1369,28 @@ class LakehouseSqlCatalog:
                 continue
             raise ValueError(f"MERGE: cannot parse clause {text.strip()!r}")
 
-        # -- matched pairs + the SQL-MERGE multiple-match guard
+        # -- matched pairs + the SQL-MERGE multiple-match guard: a
+        # source-only duplicate check on an equi-join column first; the
+        # pair join runs only when that check cannot rule a match out
         if matched_clauses:
-            dup = self.spark.sql(
-                f"SELECT {ta}.{key} AS k FROM {pair} "
-                f"GROUP BY {ta}.{key} HAVING count(*) > 1 LIMIT 1"
-            ).collect()
-            if dup:
-                raise ValueError(
-                    f"MERGE: target row {key}={dup[0][0]!r} matches "
-                    "multiple source rows (dedup the source first)"
-                )
+            d = _equi_source_column(
+                self.spark, on_sql, ta, sa, target.schema, source.schema
+            )
+            if d is not None:
+                d = "`" + d.replace("`", "``") + "`"
+            if d is None or self.spark.sql(
+                f"SELECT 1 FROM {sv} WHERE {d} IS NOT NULL "
+                f"GROUP BY {d} HAVING count(*) > 1 LIMIT 1"
+            ).collect():
+                dup = self.spark.sql(
+                    f"SELECT {ta}.{key} AS k FROM {pair} "
+                    f"GROUP BY {ta}.{key} HAVING count(*) > 1 LIMIT 1"
+                ).collect()
+                if dup:
+                    raise ValueError(
+                        f"MERGE: target row {key}={dup[0][0]!r} matches "
+                        "multiple source rows (dedup the source first)"
+                    )
 
         # first-applicable-clause semantics for multiple WHEN MATCHED
         updates = None

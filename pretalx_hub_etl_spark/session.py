@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Session-level (runtime-settable) confs. Applied both at build time and
 #: defensively onto externally-created sessions (the verify driver builds its
@@ -120,3 +120,15 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
     count = metrics.METRIC_COMPILATION_TIME().getCount()
     return int(count), codegen.CodeGenerator.compileTime() / 1e6
+
+
+def release_checkpoint(pinned: DataFrame) -> None:
+    """Drop the rows behind a ``localCheckpoint``-ed frame.
+
+    ``DataFrame.unpersist`` only reaches the cache manager. A local
+    checkpoint's rows are the persisted RDD under the frame's
+    ``LogicalRDD`` leaf, which stays in ``getPersistentRDDs`` (and in
+    executor memory) until that RDD itself is unpersisted. The frame
+    cannot be read afterwards.
+    """
+    pinned._jdf.logicalPlan().rdd().unpersist(False)

@@ -2994,56 +2994,63 @@ class MergeSink:
         w = df.write.mode("errorifexists")
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
-        w.parquet(stage)
-        if cdf_df is not None:
-            # S51: the commit's change rows ride INSIDE the staged dir
-            # (cdf/ member -> role "cdf" in the manifest) so the feed
-            # commits atomically with the data it describes
-            cdf_df.write.mode("errorifexists").parquet(
-                os.path.join(stage, "cdf")
+        try:
+            w.parquet(stage)
+            if cdf_df is not None:
+                # S51: the commit's change rows ride INSIDE the staged
+                # dir (cdf/ member -> role "cdf" in the manifest) so the
+                # feed commits atomically with the data it describes
+                cdf_df.write.mode("errorifexists").parquet(
+                    os.path.join(stage, "cdf")
+                )
+            manifest = build_manifest(
+                version, stage, bloom_on=self.bloom_on
             )
-        manifest = build_manifest(version, stage, bloom_on=self.bloom_on)
-        if cdf_df is not None:
-            manifest["cdf"] = True
-        if manifest_extra:
-            manifest.update(manifest_extra)
-        # visibility inheritance (sinks/txn.py): built on a pending
-        # multi-table-txn base -> invisible until that txn commits
-        from .txn import inherit_pending
+            if cdf_df is not None:
+                manifest["cdf"] = True
+            if manifest_extra:
+                manifest.update(manifest_extra)
+            # visibility inheritance (sinks/txn.py): built on a pending
+            # multi-table-txn base -> invisible until that txn commits
+            from .txn import inherit_pending
 
-        inherited = inherit_pending(log, version)
-        own_txn = (manifest_extra or {}).get("txn")
-        if own_txn:
-            # a commit published FOR a transaction (S53 cow_delta) does
-            # not "inherit" its own marker
-            inherited = [
-                t for t in inherited if t.get("id") != own_txn.get("id")
-            ]
-        if inherited:
-            manifest["txn_inherited"] = inherited
-        stamp: dict = {}
-        if own_txn:
-            stamp["txn"] = own_txn
-        if inherited:
-            stamp["txn_inherited"] = inherited
-        if stamp:
-            # persist the txn identity WITH the staged files (the _TXN
-            # stamp build_manifest restores): a crash between the
-            # rename claim and publish is healed from the directory —
-            # without the stamp the healed manifest would lose the
-            # marker and leak pending data into visibility
-            import json as _json
+            inherited = inherit_pending(log, version)
+            own_txn = (manifest_extra or {}).get("txn")
+            if own_txn:
+                # a commit published FOR a transaction (S53 cow_delta) does
+                # not "inherit" its own marker
+                inherited = [
+                    t for t in inherited if t.get("id") != own_txn.get("id")
+                ]
+            if inherited:
+                manifest["txn_inherited"] = inherited
+            stamp: dict = {}
+            if own_txn:
+                stamp["txn"] = own_txn
+            if inherited:
+                stamp["txn_inherited"] = inherited
+            if stamp:
+                # persist the txn identity WITH the staged files (the _TXN
+                # stamp build_manifest restores): a crash between the
+                # rename claim and publish is healed from the directory —
+                # without the stamp the healed manifest would lose the
+                # marker and leak pending data into visibility
+                import json as _json
 
-            from .manifest import _TXN_STAMP
+                from .manifest import _TXN_STAMP
 
-            with open(os.path.join(stage, _TXN_STAMP), "w") as fh:
-                _json.dump(stamp, fh, separators=(",", ":"))
+                with open(os.path.join(stage, _TXN_STAMP), "w") as fh:
+                    _json.dump(stamp, fh, separators=(",", ":"))
+        except BaseException:
+            # a failed write job (e.g. a CHECK violation) must not
+            # leave its partial stage beside the versions
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
         final = os.path.join(self.path, f"v{version}")
         try:
             os.rename(stage, final)
         except OSError as exc:
             import errno
-            import shutil
 
             shutil.rmtree(stage, ignore_errors=True)
             # Only a destination-already-exists failure is a version race;
