@@ -398,42 +398,59 @@ def _split_assignments(s: str) -> list[tuple[str, str]]:
     return out
 
 
-def _equi_source_column(spark, on_sql, ta, sa, target_schema, source_schema):
-    """The source column ``d`` of a top-level ``ON`` conjunct
-    ``ta.c = sa.d`` (either side first) whose two columns have the
-    same atomic type, or None when the condition has no such conjunct.
-
-    With such a conjunct a target row can match two source rows only if
-    two non-NULL source rows share ``d``: equality of one type is
-    transitive, and NULL equals nothing. The condition is read with
-    Spark's own expression parser, so quoting and parentheses need no
-    handling here."""
+def _parse_expression(spark, text):
+    """``text`` parsed by Spark's own expression parser (an unresolved
+    Catalyst tree), or None when it does not parse."""
     from pyspark.errors import ParseException
-    from pyspark.sql.types import AtomicType, VariantType
 
     try:
-        cond = (
+        return (
             spark._jsparkSession.sessionState()
             .sqlParser()
-            .parseExpression(on_sql)
+            .parseExpression(text)
         )
     except ParseException:
-        return None  # the pair-join guard reports it
+        return None
+
+
+def _name_folder(spark):
     if spark.conf.get("spark.sql.caseSensitive") == "true":
-        fold = str
-    else:
-        fold = str.lower
+        return str
+    return str.lower
+
+
+def _column_parts(node) -> list[str] | None:
+    """The name parts of a parsed column reference, else None."""
+    if node is None or node.getClass().getSimpleName() != "UnresolvedAttribute":
+        return None
+    parts = node.nameParts()
+    return [parts.apply(i) for i in range(parts.size())]
+
+
+def _on_equalities(spark, on_sql, ta, sa, target_schema, source_schema):
+    """``(pairs, whole)``: the top-level ``ON`` conjuncts ``ta.c = sa.d``
+    (either side first) whose two columns have the same atomic type, as
+    ``(c, d)`` field names in statement order, and whether the whole
+    condition is exactly one such conjunct.
+
+    The condition is read with Spark's own expression parser, so
+    quoting and parentheses need no handling here; alias and column
+    names fold per ``spark.sql.caseSensitive``."""
+    from pyspark.sql.types import AtomicType, VariantType
+
+    cond = _parse_expression(spark, on_sql)
+    if cond is None:
+        return [], False  # the pair-join guard reports it
+    fold = _name_folder(spark)
 
     def column(node, alias, schema):
-        if node.getClass().getSimpleName() != "UnresolvedAttribute":
+        parts = _column_parts(node)
+        if parts is None or len(parts) != 2 or fold(parts[0]) != fold(alias):
             return None
-        parts = node.nameParts()
-        if parts.size() != 2 or fold(parts.apply(0)) != fold(alias):
-            return None
-        name = fold(parts.apply(1))
-        hits = [f for f in schema.fields if fold(f.name) == name]
+        hits = [f for f in schema.fields if fold(f.name) == fold(parts[1])]
         return hits[0] if len(hits) == 1 else None
 
+    pairs = []
     todo = [cond]
     while todo:
         node = todo.pop()
@@ -452,8 +469,198 @@ def _equi_source_column(spark, on_sql, ta, sa, target_schema, source_schema):
                     and isinstance(d.dataType, AtomicType)
                     and not isinstance(d.dataType, VariantType)
                 ):
-                    return d.name
-    return None
+                    pairs.append((c.name, d.name))
+                    break
+    whole = len(pairs) == 1 and cond.getClass().getSimpleName() == "EqualTo"
+    return pairs, whole
+
+
+def _equi_source_column(spark, on_sql, ta, sa, target_schema, source_schema):
+    """The source column ``d`` of the first top-level ``ON`` conjunct
+    ``ta.c = sa.d`` whose two columns have the same atomic type, or None
+    when the condition has no such conjunct (``_on_equalities``).
+
+    With such a conjunct a target row can match two source rows only if
+    two non-NULL source rows share ``d``: equality of one type is
+    transitive, and NULL equals nothing."""
+    pairs, _ = _on_equalities(
+        spark, on_sql, ta, sa, target_schema, source_schema
+    )
+    return pairs[0][1] if pairs else None
+
+
+def _one_join_applies(
+    spark, on_sql, ta, sa, key, target_schema, source_schema,
+    matched_clauses, insert_clauses,
+) -> bool:
+    """Whether a MERGE can run as one target/source join
+    (``LakehouseSqlCatalog._merge_one_join``), read from the parsed
+    statement alone:
+
+    - ``ON`` is exactly ``ta.<merge key> = sa.d`` over one atomic type,
+      so a source row matches no target row iff its ``d`` is NULL or no
+      target row carries that key;
+    - every INSERT sets the key from ``sa.d`` (``INSERT *`` when ``d``
+      is the key's name), so an inserted row never collides with a
+      target key and the branch plan's upsert-by-key equals SQL's
+      insert;
+    - at least one WHEN MATCHED clause, so the multiple-match guard
+      runs and no target row meets two source rows in the join."""
+    if not matched_clauses:
+        return False
+    pairs, whole = _on_equalities(
+        spark, on_sql, ta, sa, target_schema, source_schema
+    )
+    fold = _name_folder(spark)
+    if not whole or fold(pairs[0][0]) != fold(key):
+        return False
+    d = fold(pairs[0][1])
+    for _cond, spec in insert_clauses:
+        if spec == "*":
+            if d != fold(key):
+                return False
+            continue
+        exprs = [e for c, e in spec if c == key]
+        parts = _column_parts(
+            _parse_expression(spark, exprs[0]) if exprs else None
+        )
+        if parts is None or [fold(p) for p in parts] not in (
+            [fold(sa), d],
+            [d],
+        ):
+            return False
+    return True
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _one_join_sql(
+    tv, sv, ta, sa, on_sql, t_cols, s_cols, out_cols,
+    matched, by_source, inserts,
+) -> str:
+    """The SQL of a one-join MERGE: ``target FULL OUTER JOIN source``,
+    one output row per joined row with the columns ``out_cols`` and
+    ``__act``, the index of the row's first applicable clause in
+    ``matched + by_source + inserts`` order (each a ``(condition,
+    action)`` pair as ``_merge_body`` parses them), -1 for a target row
+    no clause changes, -2 for a source row no INSERT takes.
+
+    Each clause group's conditions and expressions resolve in the scope
+    the branch plan gives them, one nested SELECT each, and each is
+    evaluated only on rows of its group:
+
+    1. the join (both aliases): matched conditions choose ``__mc`` and
+       matched SET values are projected. Target columns then travel as
+       ``__t<i>`` and source columns under their own names;
+    2. ``(1) AS <source alias>``, where only source columns are
+       visible: insert conditions choose ``__ic`` and insert values are
+       projected. Target columns are renamed back last, so no
+       expression can see them;
+    3. ``(2) AS <target alias>``, where only target columns are
+       visible: by-source conditions choose ``__bc``, by-source SET
+       values are projected, and each output column takes the value of
+       the row's clause or else its target value.
+
+    ``__tp`` and ``__sp`` mark the side a joined row has. Later select
+    items read earlier ones by name (Spark's lateral column alias)."""
+    q = _quote
+    n_m, n_b = len(matched), len(by_source)
+    groups = (
+        (matched, 0, "__mc", "__m"),
+        (by_source, n_m, "__bc", "__b"),
+        (inserts, n_m + n_b, "__ic", "__i"),
+    )
+
+    def choose(clauses, base, none):
+        whens = " ".join(
+            f"WHEN ({cond or 'TRUE'}) THEN {base + i}"
+            for i, (cond, _x) in enumerate(clauses)
+        )
+        return f"CASE {whens} ELSE {none} END" if whens else str(none)
+
+    def sets_of(spec):
+        if spec is None:
+            return {}
+        if spec == "*":
+            return {c: f"{sa}.{q(c)}" for c in s_cols}
+        return dict(spec)
+
+    def values(clauses, base, idx, prefix):
+        """``prefix<n>``: output column n's value under the group's
+        clause that sets it (NULL otherwise), and the clause ids per
+        output column."""
+        items, ids = [], {}
+        for n, c in enumerate(out_cols):
+            sets = [
+                (base + i, sets_of(x)[c])
+                for i, (_cond, x) in enumerate(clauses)
+                if c in sets_of(x)
+            ]
+            if sets:
+                whens = " ".join(f"WHEN {i} THEN ({e})" for i, e in sets)
+                items.append(f"CASE {idx} {whens} END AS {prefix}{n}")
+                ids[n] = [str(i) for i, _e in sets]
+        return items, ids
+
+    m_items, m_ids = values(*groups[0])
+    b_items, b_ids = values(*groups[1])
+    i_items, i_ids = values(*groups[2])
+    t_names = [f"__t{i}" for i in range(len(t_cols))]
+    level1 = ", ".join(
+        [f"{ta}.{q(c)} AS {t}" for c, t in zip(t_cols, t_names)]
+        + [f"{sa}.{q(c)} AS {q(c)}" for c in s_cols]
+        + [
+            f"{ta}.__tp AS __tp",
+            f"{sa}.__sp AS __sp",
+            f"CASE WHEN {ta}.__tp AND {sa}.__sp THEN "
+            f"{choose(matched, 0, -1)} END AS __mc",
+        ]
+        + m_items
+    )
+    level2 = ", ".join(
+        ["__tp", "__sp", "__mc"]
+        + [f"__m{n}" for n in m_ids]
+        + [
+            "CASE WHEN __sp AND __tp IS NULL THEN "
+            f"{choose(inserts, n_m + n_b, -2)} END AS __ic"
+        ]
+        + i_items
+        + [f"{t} AS {q(c)}" for c, t in zip(t_cols, t_names)]
+    )
+    finals = []
+    for n, c in enumerate(out_cols):
+        whens = [
+            f"WHEN {idx} IN ({', '.join(ids[n])}) THEN {prefix}{n}"
+            for (_cl, _b, idx, prefix), ids in zip(
+                groups, (m_ids, b_ids, i_ids)
+            )
+            if n in ids
+        ]
+        other = f"{ta}.{q(c)}" if c in t_cols else "NULL"
+        finals.append(
+            f"CASE {' '.join(whens)} ELSE {other} END AS {q(c)}"
+            if whens
+            else f"{other} AS {q(c)}"
+        )
+    level3 = ", ".join(
+        [
+            "CASE WHEN __tp AND __sp IS NULL THEN "
+            f"{choose(by_source, n_m, -1)} END AS __bc"
+        ]
+        + b_items
+        + ["coalesce(__mc, __bc, __ic) AS __act"]
+        + finals
+    )
+    return (
+        f"SELECT {level3} FROM ("
+        f"SELECT {level2} FROM ("
+        f"SELECT {level1} FROM "
+        f"(SELECT *, TRUE AS __tp FROM {tv}) {ta} FULL OUTER JOIN "
+        f"(SELECT *, TRUE AS __sp FROM {sv}) {sa} ON {on_sql}"
+        f") {sa}) {ta}"
+    )
 
 
 class LakehouseSqlCatalog:
@@ -1154,15 +1361,26 @@ class LakehouseSqlCatalog:
           ``THEN UPDATE SET c = expr, ...`` (S28c — target columns
           only: there is no source row on that side)
 
-        Routing: CoW -> one ``MergeSink.merge`` commit (upserts +
-        deletes); MoR -> one delta commit. ``WITH SCHEMA EVOLUTION``
-        opts into S22 semantics (a source-only column evolves the
-        table; without it a schema mismatch raises).
+        Routing: when ``ON`` is exactly ``t.<merge key> = s.d`` (one
+        atomic type), every INSERT sets the key from ``s.d`` and at
+        least one WHEN MATCHED clause exists, ONE ``target FULL OUTER
+        JOIN source`` applies every clause (``_merge_one_join``): CoW
+        commits the kept, updated and inserted rows as the new version
+        through ``MergeSink.commit_state``, and MoR writes its data
+        delta and tombstones from one pin of the changed rows. Any other
+        statement takes the branch plan: one plan per clause group,
+        applied as keyed upserts + deletes (CoW -> one
+        ``MergeSink.merge`` commit, MoR -> one delta commit), so an
+        unmatched source row whose inserted key already exists replaces
+        that row. The choice reads the parsed statement only.
+        ``WITH SCHEMA EVOLUTION`` opts into S22 semantics (a
+        source-only column evolves the table; without it a schema
+        mismatch raises).
 
         The source is evaluated ONCE: it is pinned with an eager
         ``localCheckpoint`` before anything reads it, and every later
-        job (the guard, each branch, the MoR data and tombstone writes,
-        a CoW OCC retry) reads those rows. The pin is released when the
+        job (the guard, the join or each branch, the write jobs, a CoW
+        OCC retry) reads those rows. The pin is released when the
         statement ends, whether it committed, staged or raised.
 
         The SQL-MERGE multiple-match precondition is enforced: a target
@@ -1392,6 +1610,18 @@ class LakehouseSqlCatalog:
                         "multiple source rows (dedup the source first)"
                     )
 
+        if _one_join_applies(
+            self.spark, on_sql, ta, sa, key, target.schema, source.schema,
+            matched_clauses, insert_clauses,
+        ):
+            return self._merge_one_join(
+                name, kind, path, key, evo, tv, sv, ta, sa, on_sql,
+                target, source, matched_clauses, by_source_clauses,
+                insert_clauses,
+            )
+
+        # -- the branch plan (statements outside the one-join shape):
+        # one plan per clause group, applied as keyed upserts + deletes
         # first-applicable-clause semantics for multiple WHEN MATCHED
         updates = None
         delete_keys = None
@@ -1516,31 +1746,9 @@ class LakehouseSqlCatalog:
                         for f in pad
                     ],
                 )
-        if not evo and upserts is not None:
-            # columns the DECLARED schema already carries are not an
-            # evolution (ALTER TABLE ADD COLUMNS made them part of the
-            # table; the first write materializes them) — only columns
-            # beyond the declaration need WITH SCHEMA EVOLUTION
-            from ..sinks.manifest import CommitLog as _CL
-
-            ddl = _CL(path).table_props().get("schema_ddl")
-            if ddl:
-                from pyspark.sql.types import StructType as _ST
-
-                declared = {
-                    f.name.lower() for f in _ST.fromDDL(ddl).fields
-                }
-                if {
-                    c.lower() for c in upserts.columns
-                } <= declared | {c.lower() for c in target.columns}:
-                    evo = True
-        if not evo and upserts is not None and set(upserts.columns) != set(
-            target.columns
-        ):
-            raise ValueError(
-                f"MERGE source schema {sorted(upserts.columns)} != table "
-                f"schema {sorted(target.columns)}; add WITH SCHEMA "
-                "EVOLUTION to evolve"
+        if upserts is not None:
+            evo = self._merge_evolution(
+                path, upserts.columns, target.columns, evo
             )
 
         from ..sinks.merge import _versions as _committed_versions
@@ -1593,40 +1801,7 @@ class LakehouseSqlCatalog:
                     allow_evolution=evo,
                 )
                 if evo and upserts is not None:
-                    # WITH SCHEMA EVOLUTION on a DECLARED table must
-                    # also evolve the declaration (r17 ADVICE): the
-                    # explicit-schema current-read fast path serves
-                    # exactly schema_ddl + prior physical names, so a
-                    # physical column the DDL does not know about would
-                    # silently vanish from current reads. Mirrors the
-                    # ALTER TABLE ADD COLUMNS bookkeeping.
-                    from ..sinks.manifest import CommitLog as _CL
-
-                    _log = _CL(path)
-                    _props = _log.table_props()
-                    _ddl = _props.get("schema_ddl")
-                    if _ddl:
-                        from pyspark.sql.types import StructType as _ST
-
-                        _declared = {
-                            f.name.lower()
-                            for f in _ST.fromDDL(_ddl).fields
-                        }
-                        _new = [
-                            f
-                            for f in upserts.schema.fields
-                            if f.name.lower() not in _declared
-                        ]
-                        if _new:
-                            _props["schema_ddl"] = ", ".join(
-                                [_ddl]
-                                + [
-                                    f"{f.name} "
-                                    f"{f.dataType.simpleString()}"
-                                    for f in _new
-                                ]
-                            )
-                            _log.write_table_props(_props)
+                    self._declare_columns(path, upserts.schema.fields)
         else:
             from ..sinks.mor import MorTable
 
@@ -1640,6 +1815,173 @@ class LakehouseSqlCatalog:
             else:
                 t.merge(self.spark, source=upserts, deletes=delete_keys)
         return self._summary("merge", name, self._current_version(name))
+
+    def _merge_one_join(
+        self, name, kind, path, key, evo, tv, sv, ta, sa, on_sql,
+        target, source, matched, by_source, inserts,
+    ) -> DataFrame:
+        """Apply a MERGE through ONE ``target FULL OUTER JOIN source``
+        (the shape ``_one_join_applies`` admits). Each joined row is
+        tagged with its first applicable clause — matched clauses in
+        statement order, then by-source clauses, then insert clauses —
+        or kept (-1) or dropped (-2), and its new values are projected
+        in the same pass (``_one_join_sql``).
+
+        CoW: the rows kept, updated or inserted ARE the new version,
+        committed through ``MergeSink.commit_state`` (identity, CDF,
+        constraints, OCC); a lost claim rebuilds the join against the
+        winner's version. MoR (and any MERGE inside a transaction): the
+        changed rows are pinned once, and the data delta and the key
+        tombstones are both written from that pin, so the target is
+        read once."""
+        from pyspark.sql import functions as F
+
+        from ..sinks.merge import MergeSink, _versions
+        from ..sinks.mor import MorTable
+
+        out_cols = list(target.columns)
+        for _cond, sets in matched + by_source:
+            out_cols += [c for c in sets or () if c not in out_cols]
+        for _cond, spec in inserts:
+            cols = source.columns if spec == "*" else [c for c, _e in spec]
+            out_cols += [c for c in cols if c not in out_cols]
+        clauses = matched + by_source + inserts
+        upsert_ids = [i for i, (_c, x) in enumerate(clauses) if x is not None]
+        delete_ids = [i for i, (_c, x) in enumerate(clauses) if x is None]
+        if upsert_ids:
+            evo = self._merge_evolution(path, out_cols, target.columns, evo)
+
+        def joined(tgt: DataFrame) -> tuple[DataFrame, list]:
+            """The join over ``tgt`` and the columns it projects: ``tgt``'s
+            own (a retry's base may carry a column a concurrent
+            evolution added) and then the statement's new ones."""
+            cols = tgt.columns + [c for c in out_cols if c not in tgt.columns]
+            tgt.createOrReplaceTempView(tv)
+            return self.spark.sql(
+                _one_join_sql(
+                    tv, sv, ta, sa, on_sql, tgt.columns, source.columns,
+                    cols, matched, by_source, inserts,
+                )
+            ), [F.col(_quote(c)) for c in cols]
+
+        act = F.col("__act")
+        empty_target = not _versions(path)
+        if kind == "cow" and self._txn is None and not empty_target:
+            committed = {}
+
+            def build(base: DataFrame, _props: dict) -> DataFrame:
+                j, cols = joined(self._overlay_ddl(base, path))
+                state = j.where((act == -1) | act.isin(upsert_ids)).select(
+                    *cols
+                )
+                committed["schema"] = state.schema
+                return state
+
+            MergeSink(path, key=key).commit_state(self.spark, build)
+            if evo and upsert_ids:
+                self._declare_columns(path, committed["schema"].fields)
+            return self._summary("merge", name, self._current_version(name))
+
+        if self._txn is not None and empty_target:
+            raise ValueError(
+                "MERGE into an empty DDL-created table inside "
+                "BEGIN TRANSACTION is not supported (the first "
+                "commit is an init) — INSERT INTO it instead"
+            )
+        j, cols = joined(target)
+        changed = (
+            j.where(act >= 0)
+            .select(*cols, act.isin(delete_ids).alias("__del"))
+            .localCheckpoint(eager=True)
+        )
+        try:
+            rows = changed.where(~F.col("__del")).drop("__del")
+            upserts = rows if upsert_ids else None
+            deletes = (
+                changed.where(F.col("__del")).select(_quote(key))
+                if delete_ids
+                else None
+            )
+            if self._txn is not None:
+                # S53: stage the keyed delta (written now, applied at
+                # COMMIT through the publish-time OCC loop)
+                if kind == "cow":
+                    self._txn.stage_cow_delta(
+                        path, source=upserts, deletes=deletes,
+                        allow_evolution=evo,
+                    )
+                else:
+                    self._txn.stage_mor_upsert(
+                        path, source=upserts, deletes=deletes
+                    )
+                return self._summary(
+                    "merge_staged", name, self._current_version(name)
+                )
+            if empty_target:
+                # DDL-created table, first commit: every changed row
+                # is an insert
+                sink = MergeSink if kind == "cow" else MorTable
+                sink(path, key=key).init(rows)
+            else:
+                MorTable(path, key=key).merge(
+                    self.spark, source=upserts, deletes=deletes
+                )
+        finally:
+            release_checkpoint(changed)
+        return self._summary("merge", name, self._current_version(name))
+
+    def _merge_evolution(self, path, columns, target_columns, evo) -> bool:
+        """Whether a MERGE writing ``columns`` evolves the table, or a
+        ValueError when it would need to but the statement lacks WITH
+        SCHEMA EVOLUTION. Columns the DECLARED schema already carries
+        are not an evolution (ALTER TABLE ADD COLUMNS made them part of
+        the table; the first write materializes them) — only columns
+        beyond the declaration need WITH SCHEMA EVOLUTION."""
+        if evo:
+            return True
+        from ..sinks.manifest import CommitLog as _CL
+
+        ddl = _CL(path).table_props().get("schema_ddl")
+        if ddl:
+            from pyspark.sql.types import StructType as _ST
+
+            declared = {f.name.lower() for f in _ST.fromDDL(ddl).fields}
+            if {c.lower() for c in columns} <= declared | {
+                c.lower() for c in target_columns
+            }:
+                return True
+        if set(columns) != set(target_columns):
+            raise ValueError(
+                f"MERGE source schema {sorted(columns)} != table "
+                f"schema {sorted(target_columns)}; add WITH SCHEMA "
+                "EVOLUTION to evolve"
+            )
+        return False
+
+    def _declare_columns(self, path, fields) -> None:
+        """WITH SCHEMA EVOLUTION on a DECLARED table must also evolve
+        the declaration (r17 ADVICE): the explicit-schema current-read
+        fast path serves exactly schema_ddl + prior physical names, so a
+        physical column the DDL does not know about would silently
+        vanish from current reads. Mirrors the ALTER TABLE ADD COLUMNS
+        bookkeeping."""
+        from ..sinks.manifest import CommitLog as _CL
+
+        log = _CL(path)
+        props = log.table_props()
+        ddl = props.get("schema_ddl")
+        if not ddl:
+            return
+        from pyspark.sql.types import StructType as _ST
+
+        declared = {f.name.lower() for f in _ST.fromDDL(ddl).fields}
+        new = [f for f in fields if f.name.lower() not in declared]
+        if new:
+            props["schema_ddl"] = ", ".join(
+                [ddl]
+                + [f"{f.name} {f.dataType.simpleString()}" for f in new]
+            )
+            log.write_table_props(props)
 
     def _try_replace_where(self, query: str) -> DataFrame | None:
         m = _REPLACE_WHERE_RE.match(query)

@@ -50,6 +50,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import release_checkpoint
 from .manifest import CommitLog, build_manifest
 
 _V_RE = re.compile(r"^v(\d+)$")
@@ -234,9 +235,7 @@ def _stamp_inherited(work: str, inherited) -> None:
             _json.dump({"txn_inherited": inherited}, fh)
 
 
-def _dense_seq(
-    df: DataFrame, out_pinned: list | None = None
-) -> DataFrame:
+def _dense_seq(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Attach ``__seq``, a DENSE 1..n numbering (per-partition counts
     -> prefix offsets -> per-partition row_number) — the identity-value
     basis that replaced ``monotonically_increasing_id()``: mid packs
@@ -251,14 +250,12 @@ def _dense_seq(
     collect is bounded by the PARTITION count, never the row count,
     and the only shuffle is the per-partition-id window (payload-sized
     — identity assignment runs on INSERT/MERGE payloads' NULL-id
-    slices, not the table). ``out_pinned`` (when given) receives the
-    checkpointed frame so an OCC retry loop can unpersist the stale
-    attempt's blocks instead of accumulating them."""
+    slices, not the table). Returns ``(numbered, pinned)``: the caller
+    releases ``pinned`` with ``session.release_checkpoint`` once the
+    write that reads ``numbered`` has ended, however it ended."""
     from pyspark.sql.window import Window
 
     pinned = df.localCheckpoint(eager=True)
-    if out_pinned is not None:
-        out_pinned.append(pinned)
     counts = sorted(
         (r[0], r[1])
         for r in pinned.groupBy(F.spark_partition_id().alias("__pid"))
@@ -280,7 +277,7 @@ def _dense_seq(
             (omap[F.col("__pid")] + F.row_number().over(w)).cast("long"),
         )
         .drop("__pid", "__mid")
-    )
+    ), pinned
 
 
 def commit_metadata_version(path: str) -> int:
@@ -1050,13 +1047,15 @@ class MergeSink:
             return s
 
         stage: str | None = None
+        seq_pin = None
         try:
             from pyspark.sql.types import LongType
 
             from .txn import inherit_pending
 
             bloom_on = self.bloom_on or props.get("bloom_on")
-            seqd = _dense_seq(df) if id_cols else None
+            if id_cols:
+                seqd, seq_pin = _dense_seq(df)
             for _ in range(50):
                 base, claim = _base_and_claim(self.path)
                 if id_cols:
@@ -1169,6 +1168,8 @@ class MergeSink:
         finally:
             if stage is not None:
                 shutil.rmtree(stage, ignore_errors=True)
+            if seq_pin is not None:
+                release_checkpoint(seq_pin)
 
     def replace_where(self, df: DataFrame, condition: str) -> dict:
         """Predicate-scoped overwrite (the Delta ``replaceWhere``
@@ -1747,6 +1748,7 @@ class MergeSink:
                 "cannot be supplied — the engine assigns them"
             )
         missing0 = [c for c in _idc(props0) if c.lower() not in have0]
+        seq_pin = None
         if missing0:
             from pyspark.sql.types import LongType, StructType as _ST0
 
@@ -1758,14 +1760,18 @@ class MergeSink:
                             types0[c] = f.dataType
             # dense 1..n values (see _dense_seq: mid overflows INT
             # identity under ANSI / duplicates without it)
-            df = _dense_seq(df)
+            df, seq_pin = _dense_seq(df)
             for c in missing0:
                 df = df.withColumn(
                     c,
                     F.col("__seq").cast(types0.get(c, LongType())),
                 )
             df = df.drop("__seq")
-        self._write(df, _next_version(self.path))
+        try:
+            self._write(df, _next_version(self.path))
+        finally:
+            if seq_pin is not None:
+                release_checkpoint(seq_pin)
         log = CommitLog(self.path)
         props = log.table_props()  # CREATE TABLE may have written one
         props["kind"] = "cow"
@@ -2791,34 +2797,16 @@ class MergeSink:
         (updates don't erase what they don't mention) and is NULL on
         inserts. Off by default: an unexpected schema change should be
         an error unless the caller opted in."""
-        for _ in range(max_retries):
-            # OCC anchor: base version and claim number from ONE directory
-            # snapshot; commit is the atomic rename onto v<claim>. An
-            # interleaved commit makes our rename fail -> recompute.
-            base, claim = _base_and_claim(self.path)
-            # manifest tables read the base through the manifest path:
-            # mergeSchema for declared mixed versions (a raw dir scan
-            # takes one footer's schema and silently drops columns the
-            # other files carry) and the column-mapping overlay (S46 —
-            # the target arrives under LOGICAL names, so the merged
-            # full state writes logical names: renames compact away)
-            if CommitLog(self.path).exists():
-                target = self._read_manifest_files(spark, base)[0]
-            else:
-                target = spark.read.parquet(
-                    os.path.join(self.path, f"v{base}")
-                )
+        from .constraints import identity_columns as _idc
+
+        def build(target: DataFrame, props: dict) -> DataFrame:
             # IDENTITY columns (S49) may be ABSENT from the source —
             # matched rows keep their target-side ids (out_col's
             # target-only rule) and NEWLY INSERTED rows get ids
-            # assigned below, above the base's stats-derived high-water
-            # mark, inside this same OCC loop (a lost claim recomputes)
-            from .constraints import identity_columns as _idc
-
-            _props_m = CommitLog(self.path).table_props()
+            # assigned by commit_state, above the base's high-water mark
             id_missing = [
                 c
-                for c in _idc(_props_m)
+                for c in _idc(props)
                 if c.lower() not in {x.lower() for x in source.columns}
                 and c in target.columns
             ]
@@ -2877,32 +2865,76 @@ class MergeSink:
                     k,
                     "left_anti",
                 )
-            _id_pins: list = []
-            id_all = [c for c in _idc(_props_m) if c in target.columns]
+            return merged
+
+        self.commit_state(
+            spark, build, max_retries=max_retries,
+            manifest_extra=manifest_extra,
+        )
+        return self.read(spark)
+
+    def commit_state(
+        self,
+        spark: SparkSession,
+        build,
+        max_retries: int = 20,
+        manifest_extra: dict | None = None,
+    ) -> int:
+        """Commit ``build(target, props)`` as the table's next version,
+        under optimistic concurrency; return the committed version.
+
+        ``build`` gets the current version's state (a logical read) and
+        the table properties, and returns the whole new state. Each
+        attempt reads the base and claim number from ONE snapshot and
+        commits by the atomic rename in ``_write``; an interleaved
+        commit makes the rename fail, and the next attempt calls
+        ``build`` again against the winner's version (no lost updates),
+        giving up after ``max_retries`` conflicts. Around ``build`` this
+        loop owns what every full-state commit shares: identity values
+        for rows whose identity columns are NULL, the change-data rows
+        of a CDF table, and (in ``_write``) generated columns and
+        CHECK / NOT NULL invariants."""
+        from .constraints import identity_columns as _idc
+
+        for _ in range(max_retries):
+            base, claim = _base_and_claim(self.path)
+            # manifest tables read the base through the manifest path:
+            # mergeSchema for declared mixed versions (a raw dir scan
+            # takes one footer's schema and silently drops columns the
+            # other files carry) and the column-mapping overlay (S46 —
+            # the target arrives under LOGICAL names, so the merged
+            # full state writes logical names: renames compact away)
+            if CommitLog(self.path).exists():
+                target = self._read_manifest_files(spark, base)[0]
+            else:
+                target = spark.read.parquet(
+                    os.path.join(self.path, f"v{base}")
+                )
+            props = CommitLog(self.path).table_props()
+            merged = build(target, props)
+            pin = None
+            id_all = [c for c in _idc(props) if c in target.columns]
             if id_all:
-                # inserted rows carry NULL in the identity columns
-                # (either the source omitted them — out_col's
-                # target-only rule leaves no target side — or the SQL
-                # MERGE's insert branch NULL-filled them): assign above
-                # the base's high-water mark (per-file stats, no scan);
-                # non-NULL values are the target's own ids round-tripped
-                # through matched rows and are preserved. HWM via the
-                # shared stats+scan-fallback helper (a stats-lost file
-                # must not silently lower the mark), values via the
-                # dense seq (mid overflows INT identity — _dense_seq);
-                # non-NULL rows leave gaps in the seq, which identity
-                # permits (uniqueness, not density, is the contract)
+                # inserted rows carry NULL in the identity columns:
+                # assign above the base's high-water mark (per-file
+                # stats, no scan); non-NULL values are the target's own
+                # ids round-tripped through kept or updated rows and are
+                # preserved. HWM via the shared stats+scan-fallback
+                # helper (a stats-lost file must not silently lower the
+                # mark), values via the dense seq (mid overflows INT
+                # identity — _dense_seq); non-NULL rows leave gaps in
+                # the seq, which identity permits (uniqueness, not
+                # density, is the contract)
                 hwm = self._identity_hwm_for(spark, base, id_all)
-                # number ONLY the rows that need new ids (any identity
-                # column NULL — the insert branch): _dense_seq pins and
-                # window-shuffles its input, so feeding it the whole
-                # merged state would cost O(table) per OCC attempt;
-                # the null slice is payload-sized (r15 ADVICE)
+                # number ONLY the rows that need new ids: _dense_seq
+                # pins and window-shuffles its input, so feeding it the
+                # whole state would cost O(table) per OCC attempt; the
+                # null slice is payload-sized (r15 ADVICE)
                 need_id = F.lit(False)
                 for c in id_all:
                     need_id = need_id | F.col(c).isNull()
                 keep = merged.filter(~need_id)
-                ins = _dense_seq(merged.filter(need_id), _id_pins)
+                ins, pin = _dense_seq(merged.filter(need_id))
                 for c in id_all:
                     typ = target.schema[c].dataType
                     ins = ins.withColumn(
@@ -2914,7 +2946,7 @@ class MergeSink:
                     )
                 merged = keep.unionByName(ins.drop("__seq"))
             cdf_df = None
-            if cdf_enabled(_props_m):
+            if cdf_enabled(props):
                 # S51: the commit's change rows — one extra diff join
                 # against the base state (the documented CDF write
                 # amplification; off unless the table opted in),
@@ -2934,7 +2966,7 @@ class MergeSink:
                         hi_al = hi_al.withColumn(
                             f.name, F.lit(None).cast(f.dataType)
                         )
-                cdf_df = _diff_frames(lo_al, hi_al, k)
+                cdf_df = _diff_frames(lo_al, hi_al, self.key)
             try:
                 self._write(
                     merged, claim, cdf_df=cdf_df,
@@ -2943,17 +2975,14 @@ class MergeSink:
             except FileExistsError:
                 # lost the version race: if the winner crashed before
                 # publishing its manifest, publish it for them so base
-                # advances, then recompute vs the new current state —
-                # dropping this attempt's identity-seq checkpoint blocks
-                # first (they would otherwise accumulate across retries)
-                for p in _id_pins:
-                    try:
-                        p.unpersist()
-                    except Exception:
-                        pass
+                # advances, then recompute vs the new current state
                 _heal_claim(self.path, claim)
                 continue
-            return self.read(spark)
+            finally:
+                # the identity pin lives exactly as long as its write
+                if pin is not None:
+                    release_checkpoint(pin)
+            return claim
         raise RuntimeError(
             f"merge lost the version race {max_retries} times at {self.path}"
         )

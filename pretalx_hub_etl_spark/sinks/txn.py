@@ -482,6 +482,7 @@ def _assign_identity_stage(
             "needs an active SparkSession (commit/heal from a live "
             "session)"
         )
+    from ..session import release_checkpoint
     from .merge import MergeSink, _dense_seq
 
     sink = MergeSink(path, key=props.get("merge_key") or "_")
@@ -492,7 +493,7 @@ def _assign_identity_stage(
             for c in id_cols:
                 if f.name.lower() == c.lower():
                     types[c] = f.dataType
-    df = _dense_seq(
+    df, pin = _dense_seq(
         spark.read.parquet(os.path.join(stage, "new"))
     )
     for c in id_cols:
@@ -510,7 +511,10 @@ def _assign_identity_stage(
         pby = [p.strip() for p in pby.split(",") if p.strip()]
     if pby:
         w = w.partitionBy(*pby)
-    w.parquet(os.path.join(out, "new"))
+    try:
+        w.parquet(os.path.join(out, "new"))
+    finally:
+        release_checkpoint(pin)
     return out
 
 

@@ -36,6 +36,8 @@ def main() -> None:
         sf_dir, names = args[0], args[1:]
     else:
         sf_dir, names = "/root/testdata/sf0.1", args
+    if not names:
+        sys.exit("usage: profile_query.py [sf_dir] q_name [q_name ...]")
 
     from pretalx_hub_etl_spark.queries import load_all
     from pretalx_hub_etl_spark.session import codegen_counters, get_spark
@@ -45,8 +47,9 @@ def main() -> None:
     base = sc.uiWebUrl + "/api/v1/applications/" + sc.applicationId
     registry = load_all()
 
-    # warm-up (bench.py protocol)
-    registry["q_agg_count"].fn(spark, sf_dir).write.mode("overwrite").format(
+    # warm-up (bench.py protocol) on the first query named, so any
+    # corpus that serves the named queries serves the warm-up too
+    registry[names[0]].fn(spark, sf_dir).write.mode("overwrite").format(
         "noop"
     ).save()
 
